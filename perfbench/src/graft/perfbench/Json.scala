@@ -1,0 +1,35 @@
+package graft.perfbench
+
+import scala.collection.immutable.ListMap
+
+/** Minimal JSON rendering for the harness's result file: maps keep their
+  * insertion order (pass a ListMap), doubles print with all their digits,
+  * non-finite doubles print as null.
+  */
+object Json {
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def render(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => render(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + render(x) }.mkString("{", ",", "}")
+    case s: Iterable[_] => s.map(render).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  def obj(fields: (String, Any)*): ListMap[String, Any] = ListMap(fields: _*)
+}
